@@ -12,7 +12,6 @@ the same rows loaded from DuckDB comparable.
 from __future__ import annotations
 
 import functools
-from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -74,32 +73,3 @@ def digests(frames: dict[str, DataFrame]) -> dict[str, tuple]:
 
 def key(d: dict) -> tuple:
     return d["rows"], d["xor"], d["lo"]
-
-
-def triangles_and_components(edges: list[tuple]) -> tuple[int, int]:
-    """Reference counts on the undirected simple graph of ``edges``:
-    (triangles, connected components), in plain Python."""
-    adj: dict = defaultdict(set)
-    for s, d in edges:
-        if s != d:
-            adj[s].add(d)
-            adj[d].add(s)
-    tri = 0
-    for u, nbrs in adj.items():
-        for v in nbrs:
-            if u < v:
-                tri += sum(1 for w in adj[u] & adj[v] if w > v)
-    parent = {v: v for v in adj}
-
-    def find(v):
-        while parent[v] != v:
-            parent[v] = parent[parent[v]]
-            v = parent[v]
-        return v
-
-    for u, nbrs in adj.items():
-        for v in nbrs:
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[ru] = rv
-    return tri, sum(1 for v in adj if find(v) == v)

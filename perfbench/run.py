@@ -4,9 +4,10 @@
 
 Run from the repository root. The run starts one Spark session at
 ``local[<cores>]`` in this process, builds the workload's input from
-``--seed`` (setup, repeated; the median is reported), then runs passes
-of timed, checked public calls back to back until ``--seconds`` have
-elapsed (at least one). The last line of stdout is one JSON object:
+``--seed`` (setup: the input is built three times and the median is
+reported), then runs passes of timed, checked public calls back to back
+until ``--seconds`` have elapsed (at least one). The last line of stdout
+is one JSON object:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -135,6 +136,25 @@ def spark_conf(host: dict, work: str, trace: bool) -> dict:
     return conf
 
 
+def stop_session(spark) -> None:
+    """Stop the session, then its JVM, and wait until the JVM has
+    exited."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    gateway.shutdown()
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        # the JVM's gateway server exits when its stdin closes
+        proc.stdin.close()
+        proc.wait(timeout=60)
+
+
 def untraced_child(args) -> dict:
     """One untraced run of the same workload and seed, as its own
     process, so the traced run can state its overhead."""
@@ -232,9 +252,13 @@ def measure(args, work: str, trace: bool) -> dict:
                 errors += ops.errors
                 if time.monotonic() - t_measure >= args.seconds:
                     break
+        # after the sampler has stopped: the Python workers this work
+        # starts are not part of any pass
+        for i, row in enumerate(rows):
+            row.update(wl.after_pass(spark, i))
     finally:
         if spark is not None:
-            spark.stop()
+            stop_session(spark)
     if trace:
         counters = read_event_log(os.path.join(work, "eventlog"), tracer.spans)
         m["counters"] = counters

@@ -2,12 +2,14 @@
 
 Writes the ten parquet tables the query registry reads (``region nation
 customer supplier part orders lineitem events documents embeddings``)
-with the same schemas, value domains and row-count ratios as the
-repository's fixed sf0.x test tables: uniform TPC-H-ish keys and
-categories, a time-ordered event stream with exponential values, bag-
-of-words documents over a 33-word vocabulary and unit-norm 64-d
-embeddings. One parquet file and one row group per table, as pandas
-writes them, so scans see the same single-split layout.
+with the same schemas, row counts and distributions as the repository's
+fixed sf0.x test tables (README.md compares them figure by figure):
+uniform TPC-H-ish keys and categories; a time-ordered event stream of
+~67 events per user with exponential(50) values; bag-of-words documents
+of 10-99 words over a 30-word vocabulary, one in twenty of them another
+document's text plus "dup"; isotropic unit-norm 64-d embeddings. One
+parquet file and one row group per table, as pandas writes them, so
+scans see the same single-split layout.
 
 The tables are a pure function of (seed, sf): the benchmark generates
 them inside its own working directory instead of reading shared data.
@@ -34,7 +36,7 @@ _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 _VOCAB = (
     "query row stream the spark line small fast group customer batch sort "
-    "value hash filter big data dup part column order scan a slow agg key "
+    "value hash filter big data part column order scan a slow agg key "
     "window table merge vector join"
 ).split()
 _LANGS = ["en", "de", "es", "fr", "zh"]
@@ -127,10 +129,16 @@ def make_tables(seed: int, sf: float) -> dict[str, pd.DataFrame]:
         "value": np.round(rng.exponential(50.0, n_ev), 2),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
     })
-    n_words = rng.integers(10, 101, n_docs)
+    n_words = rng.integers(10, 100, n_docs)
     words = rng.choice(_VOCAB, int(n_words.sum()))
     cuts = np.cumsum(n_words)[:-1]
     texts = [" ".join(ws) for ws in np.split(words, cuts)]
+    # one document in twenty is another one's text plus a trailing "dup"
+    n_dup = n_docs // 20
+    dups = rng.choice(n_docs, n_dup, replace=False)
+    originals = np.setdiff1d(np.arange(n_docs), dups)
+    for i, j in zip(dups, rng.choice(originals, n_dup)):
+        texts[i] = texts[j] + " dup"
     out["documents"] = pd.DataFrame({
         "doc_id": np.arange(n_docs, dtype=np.int64),
         "text": texts,
@@ -138,10 +146,11 @@ def make_tables(seed: int, sf: float) -> dict[str, pd.DataFrame]:
         "source": [f"src{k % 20}" for k in range(n_docs)],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
-    labels = rng.integers(0, 10, n_emb).astype(np.int32)
-    centers = rng.normal(0.0, 1.0, (10, 64))
-    vecs = centers[labels] + rng.normal(0.0, 1.0, (n_emb, 64))
+    # isotropic, as in the fixed tables: pairwise cosines of ~0 +- 1/8,
+    # so near-duplicates are rare and the label is independent of the vector
+    vecs = rng.normal(0.0, 1.0, (n_emb, 64))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
+    labels = rng.integers(0, 10, n_emb).astype(np.int32)
     out["embeddings"] = pd.DataFrame({
         "vec_id": np.arange(n_emb, dtype=np.int64),
         "embedding": list(vecs),

@@ -17,11 +17,10 @@ ROOT = os.path.dirname(BENCH)
 sys.path.insert(0, BENCH)
 sys.path.insert(0, ROOT)
 
-import checks  # noqa: E402
 import run as bench_run  # noqa: E402
 from tracer import Tracer  # noqa: E402
 from tables import make_tables  # noqa: E402
-from workloads import Ops, QuerySuite  # noqa: E402
+from workloads import Ops, QuerySuite, WebPipeline  # noqa: E402
 
 
 def _declared() -> dict:
@@ -95,6 +94,23 @@ def test_a_wrong_digest_is_reported_as_a_failure(spark, tmp_path):
     assert "oracle" in ops.errors[0]
 
 
+def test_a_wrong_pipeline_output_is_reported_as_a_failure(spark, tmp_path):
+    wl = WebPipeline(1, str(tmp_path), size="tiny")
+    wl.make_input(spark)
+    wl.prepare(spark)
+    ops = Ops(Tracer(enabled=False), 0)
+    wl.run_pass(spark, ops)
+    assert (ops.attempted, ops.failed) == (1, 0), ops.errors
+    assert 0 < wl.after_pass(spark, 0)["skew.hub_src_frac"] <= 1
+    rows, xor, lo = wl.ref_digests["labels"]
+    wl.ref_digests["labels"] = (rows, xor ^ 1, lo)
+    ops = Ops(Tracer(enabled=False), 1)
+    wl.run_pass(spark, ops)
+    wl.after_pass(spark, 1)
+    assert (ops.attempted, ops.failed) == (1, 1)
+    assert "labels digest" in ops.errors[0]
+
+
 def test_an_operation_that_raises_is_counted_not_fatal(spark):
     ops = Ops(Tracer(enabled=False), 0)
 
@@ -121,9 +137,3 @@ def test_seed_changes_the_query_suite_input():
     one, two = snapshot(1), snapshot(2)
     # every table but the fixed dimension tables changes with the seed
     assert {n for n in one if one[n] != two[n]} == set(one) - {"region", "nation"}
-
-
-def test_reference_counts_on_a_known_graph():
-    # two triangles sharing an edge, plus a separate edge
-    edges = [(1, 2), (2, 3), (3, 1), (2, 4), (4, 3), (3, 2), (7, 8)]
-    assert checks.triangles_and_components(edges) == (2, 2)

@@ -6,7 +6,10 @@
   per process, outside every timed pass;
 - ``run_pass(spark, ops)``: one pass of timed public calls, each made
   through ``ops.call`` so it is spanned, counted and checked. Returns
-  the pass's per-layer values beyond the calls' walls.
+  the pass's per-layer values beyond the calls' walls;
+- ``after_pass(spark, pass_id)``: per-layer values of a pass that are
+  measured after the passes, outside their timed spans and memory
+  sampling, and that pass's clean-up.
 
 Sizes come in two profiles: ``full`` (what the benchmark measures) and
 ``tiny`` (the benchmark's own tests).
@@ -19,6 +22,7 @@ import shutil
 import sys
 import traceback
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 import checks
@@ -75,7 +79,7 @@ class WebPipeline:
         "tiny": {"sites": 3, "pages_per_site": 6, "max_iter": 2},
     }
     # the pipeline test's threshold; routes ~47% of the full corpus's
-    # sources through the hub path (measured by prepare())
+    # sources through PageRank's hub path (measured by after_pass())
     HUB_THRESHOLD = 3
 
     def __init__(self, seed: int, work_dir: str, size: str = "full"):
@@ -83,8 +87,7 @@ class WebPipeline:
         s = self.SIZES[size]
         self.sites, self.per_site, self.max_iter = s["sites"], s["pages_per_site"], s["max_iter"]
         self.pages_dir = os.path.join(work_dir, "pages")
-        self.pass_no = 0
-        self.seen: dict[str, tuple] = {}
+        self.pass_dirs: list[tuple[str, str]] = []
 
     def make_input(self, spark) -> dict:
         from rad_ecg_spark.sources.pages import generate_pages
@@ -94,28 +97,41 @@ class WebPipeline:
         return {"pages": spark.read.parquet(self.pages_dir).count()}
 
     def prepare(self, spark) -> dict:
+        """Reference answers from the test suite's plain-Python oracles
+        over ``expected_edges``, the engine's own edge list of the
+        generated corpus (it has no duplicate pages to drop)."""
         from rad_ecg_spark.sources.pages import expected_edges
+        from tests.oracles import components_oracle, label_prop_oracle, triangles_oracle
 
-        edges = {(s, d) for s, d in expected_edges(self.sites, self.per_site) if s != d}
-        outdeg: dict[str, int] = {}
-        for s, _ in edges:
-            outdeg[s] = outdeg.get(s, 0) + 1
+        edges = sorted({(s, d) for s, d in expected_edges(self.sites, self.per_site) if s != d})
+        components = components_oracle(edges)
+        labels = label_prop_oracle(edges, max_iter=self.max_iter)
         self.ref_edges = len(edges)
-        self.n_vertices = len({v for e in edges for v in e})
-        self.ref_triangles, self.ref_components = checks.triangles_and_components(list(edges))
-        self.hub_src_frac = sum(d >= self.HUB_THRESHOLD for d in outdeg.values()) / len(outdeg)
+        self.n_vertices = len(components)
+        self.ref_triangles = triangles_oracle(edges)[0]
+        self.ref_components = len(set(components.values()))
+        # from pandas, so Arrow ships the rows and no Python worker starts
+        self.ref_digests = checks.digests({
+            "components": spark.createDataFrame(
+                pd.DataFrame(list(components.items()), columns=["id", "component"])
+            ),
+            "labels": spark.createDataFrame(
+                pd.DataFrame(list(labels.items()), columns=["id", "label"])
+            ),
+        })
         return {
             "edges": self.ref_edges, "vertices": self.n_vertices,
             "triangles": self.ref_triangles, "components": self.ref_components,
-            "hub_src_frac": self.hub_src_frac,
+            "digests": {k: list(v) for k, v in self.ref_digests.items()},
         }
 
     def run_pass(self, spark, ops: Ops) -> dict:
         from rad_ecg_spark.plans.pipeline import run_pipeline
 
-        self.pass_no += 1
-        out_dir = os.path.join(self.work_dir, f"out-{self.pass_no}")
-        ck_dir = os.path.join(self.work_dir, f"ck-{self.pass_no}")
+        n = len(self.pass_dirs)
+        out_dir = os.path.join(self.work_dir, f"out-{n}")
+        ck_dir = os.path.join(self.work_dir, f"ck-{n}")
+        self.pass_dirs.append((out_dir, ck_dir))
         pages = spark.read.parquet(self.pages_dir)
 
         def check(summary):
@@ -133,11 +149,10 @@ class WebPipeline:
             )
             if ranks["rows"] != self.n_vertices or abs(ranks["mass"] - 1.0) > MASS_TOL:
                 errs.append(f"{ranks['rows']} ranks with mass {ranks['mass']!r}")
-            for part in ("components", "labels"):
-                d = checks.key(checks.digest(spark.read.parquet(os.path.join(out_dir, part))))
-                prev = self.seen.setdefault(part, d)
-                if prev != d:
-                    errs.append(f"{part} digest {d} differs from {prev}")
+            for part, want in self.ref_digests.items():
+                got = checks.key(checks.digest(spark.read.parquet(os.path.join(out_dir, part))))
+                if got != want:
+                    errs.append(f"{part} digest {got} != reference {want}")
             return "; ".join(errs) or None
 
         summary = ops.call(
@@ -150,7 +165,7 @@ class WebPipeline:
             ),
             check,
         )
-        out: dict[str, float] = {"skew.hub_src_frac": self.hub_src_frac}
+        out: dict[str, float] = {}
         if summary is not None:
             walls = summary["stage_wall_s"]
             for stage, wall in walls.items():
@@ -161,6 +176,23 @@ class WebPipeline:
             out["pipeline.kept_frac"] = summary["kept_after_dedup"] / summary["pages"]
         out["checkpoint.bytes_mb"] = _dir_mb(ck_dir)
         out["pipeline.output_mb"] = _dir_mb(out_dir)
+        return out
+
+    def after_pass(self, spark, pass_id: int) -> dict:
+        """The share of sources that PageRank's hub split puts on the
+        hub side, from the engine's ``split_hub_edges`` over the graph
+        the pass built (its written rep_map); then remove the pass's
+        output and checkpoint dirs."""
+        from rad_ecg_spark.operators.skew import split_hub_edges
+        from rad_ecg_spark.plans.pipeline import build_graph
+
+        out = {}
+        out_dir, ck_dir = self.pass_dirs[pass_id]
+        rep_map = os.path.join(out_dir, "rep_map")
+        if os.path.isdir(rep_map):
+            edges = build_graph(spark.read.parquet(self.pages_dir), spark.read.parquet(rep_map))
+            _residual, _hub_edges, hub_ids = split_hub_edges(edges, self.HUB_THRESHOLD)
+            out["skew.hub_src_frac"] = hub_ids.count() / edges.select("src").distinct().count()
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(ck_dir, ignore_errors=True)
         return out
@@ -238,6 +270,9 @@ class QuerySuite:
                 lambda got, want=want: None if got == want
                 else f"digest {got} != oracle {want}",
             )
+        return {}
+
+    def after_pass(self, spark, pass_id: int) -> dict:
         return {}
 
 
