@@ -33,7 +33,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+from rad_ecg_spark.operators.graph_core import LoopStats
+from rad_ecg_spark.operators.pagerank import pagerank
 from rad_ecg_spark.session import get_spark
 from rad_ecg_spark.sources.pages import generate_pages
 from rad_ecg_spark.sources.synth_graph import synth_edges
@@ -115,7 +116,7 @@ def main() -> None:
     pr_runs: list[dict] = []
     for _ in range(pr_repeats):
         t0 = time.monotonic()
-        stats = PageRankStats()
+        stats = LoopStats()
         pagerank(edges, tol=0.0, max_iter=pr_iters, stats=stats).count()
         pr_wall = time.monotonic() - t0
         half = sorted(stats.iter_wall_s[len(stats.iter_wall_s) // 2 :])

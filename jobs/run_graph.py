@@ -24,10 +24,6 @@ def main() -> None:
     ap.add_argument("--edges", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--max-iter", type=int, default=50)
-    ap.add_argument("--method", default="hybrid",
-                    choices=["hybrid", "hashmin", "star"],
-                    help="components only: hybrid (capped hashmin + star "
-                         "on the contraction) is the recommended default")
     ap.add_argument("--partitions", type=int)
     args = ap.parse_args()
 
@@ -42,19 +38,18 @@ def main() -> None:
         from rad_ecg_spark.operators.components import connected_components
 
         out = connected_components(
-            edges, method=args.method, max_iter=args.max_iter,
-            num_partitions=args.partitions
+            edges, max_iter=args.max_iter, num_partitions=args.partitions
         )
-        info["method"] = args.method
     elif args.algo == "labelprop":
-        from rad_ecg_spark.operators.labelprop import LabelPropStats, label_propagation
+        from rad_ecg_spark.operators.graph_core import LoopStats
+        from rad_ecg_spark.operators.labelprop import label_propagation
 
-        st = LabelPropStats()
+        st = LoopStats()
         out = label_propagation(
             edges, max_iter=args.max_iter, num_partitions=args.partitions, stats=st
         )
         info.update(iterations=st.iterations, converged=st.converged,
-                    changes=st.changes)
+                    changes=st.deltas)
     else:
         from rad_ecg_spark.operators.triangles import triangles
 

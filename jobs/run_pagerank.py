@@ -52,7 +52,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+    from rad_ecg_spark.operators.graph_core import LoopStats
+    from rad_ecg_spark.operators.pagerank import pagerank
     from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
     spark = SparkSession.builder.appName("linkgraph-pagerank").getOrCreate()
@@ -81,7 +82,7 @@ def main() -> None:
         )
     else:
         ck = None
-    stats = PageRankStats()
+    stats = LoopStats()
     ranks = pagerank(
         edges,
         damping=args.damping,

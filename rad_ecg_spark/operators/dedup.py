@@ -540,11 +540,10 @@ def dup_clusters(
     # verified exactly once (persist locking) while filling its edge
     # cache — a dedicated verified.count() was a pure extra pass over
     # the candidates+verify chain (same fusion as triangle_count/CC).
-    # hybrid = capped hashmin then star-on-contraction: measured 3.7x
-    # faster than pure star on the sf0.01 pair graph (7.6 vs 28.3 s)
-    # and it keeps star's worst-case round bound on chain-shaped
-    # clusters — same default rationale as the registry CC query.
-    cc = connected_components(verified, method="hybrid")
+    # capped hashmin then star-on-contraction: measured 3.7x faster
+    # than pure star on the sf0.01 pair graph (7.6 vs 28.3 s) and it
+    # keeps star's worst-case round bound on chain-shaped clusters.
+    cc = connected_components(verified)
     csize = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     out = cc.join(csize, "component").select(
         F.col("id").alias(id_col),

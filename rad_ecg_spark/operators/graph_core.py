@@ -13,17 +13,25 @@ Scale notes:
   strings in every shuffle of every iteration, so iterative algorithms
   should run on encoded edges at scale; the mapping is a one-time
   range-sort that pays for itself after ~1 iteration.
+- ``iterate`` is the one iterative-loop driver: PageRank, label
+  propagation and both connected-components phases are step functions
+  run by it (its docstring holds the loop discipline).
 """
 
 from __future__ import annotations
 
+import time
 from contextlib import contextmanager
-from typing import Iterator
+from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
 
 def normalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -44,12 +52,19 @@ def normalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 EDGE_ROWS_PER_PARTITION = 150_000
 
 
+def session_partitions(spark) -> int:
+    """The session's shuffle-partition count: the one default partition
+    count of the engine (``get_spark`` sizes it to the cores; on a
+    cluster spark-submit sizes it to the executors)."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def size_partitions(spark, n_rows: int, configured: int | None = None) -> int:
     """Partition count proportional to data size, capped by the session
     shuffle-partition setting (which on a real cluster is sized to
     executor count)."""
     if configured is None:
-        configured = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        configured = session_partitions(spark)
     return max(2, min(configured, n_rows // EDGE_ROWS_PER_PARTITION + 1))
 
 
@@ -125,6 +140,134 @@ def free_local_checkpoint(df: DataFrame | None) -> None:
         pass  # best-effort: a leaked block degrades perf, not correctness
 
 
+@dataclass
+class LoopStats:
+    """What one iterative-operator call did (filled in by ``iterate``;
+    the operator adds its graph sizes and setup wall).
+
+    ``deltas`` holds each iteration's ``delta`` aggregate: the max rank
+    change for PageRank, the number of vertices whose label changed for
+    label propagation and hashmin."""
+
+    iterations: int = 0
+    deltas: list = field(default_factory=list)
+    iter_wall_s: list[float] = field(default_factory=list)
+    setup_wall_s: float = 0.0
+    converged: bool = False
+    num_vertices: int = 0
+    num_edges: int = 0
+    resumed_from: int | None = None
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, Row | None], tuple[DataFrame, list[Column]]],
+    done: Callable[[Row, Row | None], bool],
+    max_iter: int,
+    num_partitions: int,
+    stats: LoopStats | None = None,
+    seed: Callable[[DataFrame], Row] | None = None,
+    cache: tuple[DataFrame, ...] = (),
+    checkpointer: CheckpointManager | None = None,
+    checkpoint_every: int = 1,
+    restore: Callable[[DataFrame], DataFrame] | None = None,
+    snapshot: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Run ``step`` over partitioned state until ``done`` or ``max_iter``;
+    returns the final state (a checkpointed frame).
+
+    ``step(state, prev) -> (next_state, aggregate columns)`` builds the
+    next state lazily; ``prev`` is the previous iteration's aggregate row
+    (``seed(state)`` before the first iteration, else None). The driver
+    evaluates the aggregates in ONE action per iteration and stops when
+    ``done(row, prev)`` holds. A ``delta`` aggregate is recorded in
+    ``stats.deltas``.
+
+    Loop discipline (each point measured at 10M edges on local[32]):
+    - the loop runs under ``pinned_loop_conf(num_partitions)``: AQE off
+      and shuffle partitions = the state's partition count, so the
+      hand-partitioned state keeps its partitioning and the write-back
+      joins stay exchange-free. ``cache`` frames are persisted inside
+      the pin (a not-yet-materialized cache planned under AQE reports
+      no partitioning, so the loop's join would add an exchange over
+      it) and unpersisted when the loop ends;
+    - every new state is ``localCheckpoint``ed: it references the old
+      state ~2x, so without a lineage cut the logical plan grows
+      exponentially (2.4 s/iter -> 140 s/iter by iteration 8), and
+      persist() caches execution, not the plan. The checkpoint is LAZY:
+      the aggregate action materializes it, so an iteration is one job
+      instead of a checkpoint job plus an aggregate job (~2-3 % per
+      iteration). The convergence figure is a column of the new state,
+      so the driver holds a few scalars, never vertex-sized data;
+    - the checkpointed frame itself is kept as state (never a
+      projection), so the superseded state's blocks can be released
+      with ``free_local_checkpoint`` once the aggregate has run; an
+      async ``checkpointer`` commit may still be writing that state, so
+      the driver waits for it first.
+
+    Durable checkpointing (``checkpointer``): every ``checkpoint_every``
+    iterations ``snapshot(state)`` is committed with the aggregate's
+    ``delta`` and ``mass`` as the ``_meta`` row's delta_max/agg_value.
+    With ``restore``, the loop resumes from the last complete snapshot
+    (``restore(loaded) -> state``); a snapshot that already met ``done``
+    or reached ``max_iter`` is returned as is, with no iteration run.
+    This is the reference's convergence-gated loop with skip-if-done
+    resume (peak_detect_v4.py:1733-1756, 1850-1853).
+    """
+    if stats is None:
+        stats = LoopStats()
+    start = 0
+    if restore is not None and checkpointer is not None:
+        last = checkpointer.last_meta()
+        if last is not None:
+            start = stats.resumed_from = stats.iterations = last["iteration"]
+            state = restore(checkpointer.load_state(start))
+            resumed = Row(delta=last["delta_max"], mass=last["agg_value"])
+            stats.converged = done(resumed, None)
+            if stats.converged or start >= max_iter:
+                return state
+    with pinned_loop_conf(state.sparkSession, num_partitions):
+        for df in cache:
+            df.persist()
+        try:
+            state = state.localCheckpoint(eager=False)
+            t = time.monotonic()
+            prev = seed(state) if seed is not None else None
+            stats.setup_wall_s += time.monotonic() - t
+            for it in range(start, max_iter):
+                t = time.monotonic()
+                nxt, aggs = step(state, prev)
+                nxt = nxt.localCheckpoint(eager=False)
+                row = nxt.agg(*aggs).collect()[0]
+                if checkpointer is not None:
+                    checkpointer.wait()
+                free_local_checkpoint(state)
+                state = nxt
+                stop = done(row, prev)
+                prev = row
+                stats.iterations = it + 1
+                if "delta" in row.__fields__:
+                    stats.deltas.append(row["delta"])
+                stats.iter_wall_s.append(round(time.monotonic() - t, 3))
+                if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+                    checkpointer.commit(
+                        iteration=it + 1,
+                        state=snapshot(state),
+                        rows=stats.num_vertices,
+                        agg_value=row["mass"],
+                        delta_max=row["delta"],
+                    )
+                if stop:
+                    stats.converged = True
+                    break
+        finally:
+            for df in cache:
+                df.unpersist()
+    if checkpointer is not None:
+        checkpointer.wait()  # the final snapshot must land before return
+    return state
+
+
 def vertices_of(edges: DataFrame) -> DataFrame:
     """Distinct vertex set, column ``id``."""
     return (
@@ -163,7 +306,7 @@ def encode_vertices(
     """
     spark = edges.sparkSession
     if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        partitions = session_partitions(spark)
     verts = vertices_of(edges)
     key_type = verts.schema["id"].dataType.simpleString()
 

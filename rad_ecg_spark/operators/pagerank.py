@@ -29,53 +29,32 @@ local[32] @ 10M edges):
 - Partial (map-side) aggregation makes the groupBy-sum skew-tolerant:
   a supernode dst key reduces to one partial row per map partition
   before the shuffle (10^8-in-degree hub => P partial rows, not 10^8
-  shuffled rows). AQE skew-join handles src-side skew in the join;
-  AQE partition coalescing is disabled inside the loop so the state's
-  partitioning stays aligned across iterations.
-- Lineage is cut with localCheckpoint EVERY iteration (the reference
-  never faces this — its state is a mutable array). This is not
-  optional: the new-state plan references the old state ~2×, so without
-  truncation the logical plan grows exponentially and Catalyst analysis
-  time explodes after ~6 iterations (measured: 2.4s/iter → 140s/iter by
-  iteration 8). persist() alone does NOT help — it caches execution,
-  not the logical plan.
-- Optional durable checkpointing via plans.checkpoint.CheckpointManager:
-  per-iteration snapshot + _meta lineage row; ``resume=True`` restarts
-  from the last complete iteration (north_rule requirement).
-
-Reference capability donor: history-driven iteration with convergence
-gating (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1733-1756)
-and skip-if-done resume (peak_detect_v4.py:1850-1853).
+  shuffled rows). Src-side skew is the hub split's
+  (``hub_degree_threshold``).
+- The loop itself (lineage cut, lazy checkpoint, release of superseded
+  state, pinned conf, durable checkpoint/resume via
+  plans.checkpoint.CheckpointManager) is graph_core.iterate's; this
+  module is its setup and step function.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import time
+from functools import partial
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
-    free_local_checkpoint,
+    LoopStats,
+    iterate,
     normalize_edges,
     out_degrees,
-    pinned_loop_conf,
     size_partitions,
 )
+from rad_ecg_spark.operators.skew import MessageEdges, message_edges
 from rad_ecg_spark.plans.checkpoint import CheckpointManager
-
-
-@dataclass
-class PageRankStats:
-    iterations: int = 0
-    deltas: list[float] = field(default_factory=list)
-    iter_wall_s: list[float] = field(default_factory=list)
-    setup_wall_s: float = 0.0
-    converged: bool = False
-    num_vertices: int = 0
-    num_edges: int = 0
-    resumed_from: int | None = None
 
 
 def pagerank(
@@ -87,8 +66,7 @@ def pagerank(
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    stats: PageRankStats | None = None,
-    dedupe_edges: bool = True,
+    stats: LoopStats | None = None,
     hub_degree_threshold: int | None = None,
     tol_mode: str = "abs",
 ) -> DataFrame:
@@ -118,15 +96,51 @@ def pagerank(
     union/partial-aggregation tree, so sums agree to ~1e-12, not
     bitwise — see tests/test_kernels_and_io.py star-graph check).
     """
-    import time as _time
-
     if tol_mode not in ("abs", "rel"):
         raise ValueError(f"tol_mode must be 'abs' or 'rel', got {tol_mode!r}")
-    t_setup = _time.monotonic()
-    spark = edges.sparkSession
+    t_setup = time.monotonic()
     if stats is None:
-        stats = PageRankStats()
+        stats = LoopStats()
+    edges, verts, num_partitions = _setup(edges, num_partitions, stats)
+    n = stats.num_vertices
+    if n == 0:
+        out = verts.select("id", F.lit(0.0).alias("rank"))
+        edges.unpersist()
+        verts.unpersist()
+        return out
+    # resolve the criterion once n is known; the loop compares against
+    # an absolute threshold either way
+    eff_tol = float(tol) if tol_mode == "abs" else float(tol) / n
+    msgs = message_edges(edges, hub_degree_threshold, num_partitions)
+    stats.setup_wall_s = time.monotonic() - t_setup
+    ranks = iterate(
+        _initial_ranks(verts, n),
+        partial(_step, msgs=msgs, n=n, damping=float(damping)),
+        lambda row, _prev: row["delta"] < eff_tol,
+        max_iter,
+        num_partitions,
+        stats,
+        seed=_dangling,
+        checkpointer=checkpointer,
+        checkpoint_every=checkpoint_every,
+        restore=partial(_restore, verts=verts, num_partitions=num_partitions)
+        if resume
+        else None,
+        snapshot=lambda state: state.select("id", "rank"),
+    )
+    result = ranks.select("id", "rank")
+    edges.unpersist()
+    verts.unpersist()
+    msgs.unpersist()
+    return result
 
+
+def _setup(
+    edges: DataFrame, num_partitions: int | None, stats: LoopStats
+) -> tuple[DataFrame, DataFrame, int]:
+    """Persisted loop inputs: (edges by src, vertex table (id, outdeg) by
+    id, partition count); records the graph sizes in ``stats``."""
+    spark = edges.sparkSession
     raw = normalize_edges(edges)
     if num_partitions is None:
         # size partitions to the data: tiny graphs at full parallelism
@@ -137,15 +151,16 @@ def pagerank(
         # callers with an expensive edge derivation persist it themselves
         # (plans/pipeline.py does).
         num_partitions = size_partitions(spark, raw.count())
-    edges = raw.repartition(num_partitions, "src")
-    if dedupe_edges:
-        # PageRank is defined over an edge SET; duplicate (src,dst) rows
-        # would silently inflate outdeg. Dedup AFTER the src repartition:
-        # HashPartitioning(src) satisfies the (src,dst) grouping (subset
-        # rule), so the distinct adds NO second shuffle.
-        edges = edges.dropDuplicates(["src", "dst"])
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = edges.count()
+    # PageRank is defined over an edge SET; duplicate (src,dst) rows
+    # would silently inflate outdeg. Dedup AFTER the src repartition:
+    # HashPartitioning(src) satisfies the (src,dst) grouping (subset
+    # rule), so the distinct adds NO second shuffle.
+    edges = (
+        raw.repartition(num_partitions, "src")
+        .dropDuplicates(["src", "dst"])
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    stats.num_edges = edges.count()
     # state table carries the static outdeg so the loop never re-joins a
     # separate degree table. Vertex set = dst side ∪ degree table keys:
     # out_degrees reuses the cached edges' HashPartitioning(src) with no
@@ -163,158 +178,62 @@ def pagerank(
         .repartition(num_partitions, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n = verts.count()
-    stats.num_vertices = n
-    stats.num_edges = n_edges
-    if n == 0:
-        out = verts.select("id", F.lit(0.0).alias("rank"))
-        edges.unpersist()
-        verts.unpersist()
-        return out
+    stats.num_vertices = verts.count()
+    return edges, verts, num_partitions
 
-    residual = hub_edges = hub_ids = None
-    if hub_degree_threshold is not None:
-        from rad_ecg_spark.operators.skew import split_hub_edges
 
-        residual, hub_edges, hub_ids = split_hub_edges(edges, hub_degree_threshold)
-        # residual inherits HashPartitioning(src) (broadcast anti-join
-        # preserves the streamed side's partitioning); hub edges get
-        # BALANCED round-robin partitioning — that is the point.
-        residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-        hub_edges = hub_edges.repartition(num_partitions).persist(
-            StorageLevel.MEMORY_AND_DISK
+def _initial_ranks(verts: DataFrame, n: int) -> DataFrame:
+    return verts.select("id", "outdeg", (F.lit(1.0) / F.lit(float(n))).alias("rank"))
+
+
+def _restore(loaded: DataFrame, verts: DataFrame, num_partitions: int) -> DataFrame:
+    """Ranks state from a durable (id, rank) snapshot."""
+    loaded = loaded.select(F.col("id").alias("cid"), "rank")
+    return (
+        verts.join(loaded, verts.id == F.col("cid"))
+        .select("id", "outdeg", "rank")
+        .repartition(num_partitions, "id")
+    )
+
+
+def _dangling(ranks: DataFrame) -> Row:
+    """Seed row: the dangling mass of the initial (or resumed) ranks."""
+    return ranks.filter(F.col("outdeg") == 0).agg(
+        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
+    ).collect()[0]
+
+
+def _step(
+    ranks: DataFrame, prev: Row, msgs: MessageEdges, n: int, damping: float
+) -> tuple[DataFrame, list[Column]]:
+    """One power iteration. ``prev["dangling"]`` is the last iteration's
+    dangling mass; the aggregates are the convergence delta, the next
+    dangling mass and the total mass — one scan, no join (delta is a
+    column)."""
+    contribs = (
+        msgs.send(
+            ranks.filter(F.col("outdeg") > 0),
+            (F.col("rank") / F.col("outdeg")).alias("w"),
         )
-        hub_ids = hub_ids.persist()
-        residual.count(), hub_edges.count(), hub_ids.count()
-
-    start_iter = 0
-    ranks = None
-    if resume and checkpointer is not None:
-        last = checkpointer.last_complete()
-        if last is not None:
-            start_iter = last
-            stats.resumed_from = last
-            loaded = checkpointer.load_state(last).select(
-                F.col("id").alias("cid"), "rank"
-            )
-            ranks = (
-                verts.join(loaded, verts.id == F.col("cid"))
-                .select("id", "outdeg", "rank")
-                .repartition(num_partitions, "id")
-                .localCheckpoint(eager=True)
-            )
-    if ranks is None:
-        # lazy: the dangling-mass seed agg below materializes it
-        ranks = verts.select(
-            "id", "outdeg", (F.lit(1.0) / F.lit(float(n))).alias("rank")
-        ).localCheckpoint(eager=False)
-
-    # one action to seed the loop's dangling mass
-    dangling = ranks.filter(F.col("outdeg") == 0).agg(
-        F.coalesce(F.sum("rank"), F.lit(0.0))
-    ).collect()[0][0]
-
-    d = float(damping)
-    base = (1.0 - d) / n
-    # resolve the criterion once n is known; the loop compares against
-    # an absolute threshold either way
-    eff_tol = float(tol) if tol_mode == "abs" else float(tol) / n
-    stats.setup_wall_s = _time.monotonic() - t_setup
-    # pin shuffle.partitions = num_partitions too: the contribution
-    # groupBy("dst") then lands on the state's partition count, keeping
-    # the write-back join exchange-free at ANY num_partitions (not just
-    # when it happens to equal the session default).
-    with pinned_loop_conf(spark, num_partitions):
-        for it in range(start_iter, max_iter):
-            t_iter = _time.monotonic()
-            # shuffle_hash: build a hash map over the per-partition ranks
-            # slice; sort-merge would re-sort the edge table every
-            # iteration. Both sides are already hash-partitioned.
-            active = ranks.filter(F.col("outdeg") > 0)
-            if residual is None:
-                msgs = edges.join(
-                    active.hint("shuffle_hash"), edges.src == ranks.id
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-            else:
-                # supernode path: hub edges (balanced partitioning) join a
-                # broadcast rank slice (<= |E|/threshold rows); residual
-                # keeps the co-partitioned path with bounded per-key rows
-                hub_slice = active.join(F.broadcast(hub_ids), "id", "left_semi")
-                m_rest = residual.join(
-                    active.hint("shuffle_hash"), residual.src == ranks.id
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-                m_hub = hub_edges.join(
-                    F.broadcast(hub_slice), hub_edges.src == F.col("id")
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-                msgs = m_rest.unionByName(m_hub)
-            contribs = msgs.groupBy("dst").agg(F.sum("w").alias("in_sum"))
-            new_ranks = (
-                ranks.join(contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left")
-                .select(
-                    ranks.id,
-                    ranks.outdeg,
-                    (
-                        F.lit(base)
-                        + F.lit(d)
-                        * (
-                            F.coalesce(F.col("in_sum"), F.lit(0.0))
-                            + F.lit(dangling / n)
-                        )
-                    ).alias("rank"),
-                    F.abs(
-                        F.lit(base)
-                        + F.lit(d)
-                        * (
-                            F.coalesce(F.col("in_sum"), F.lit(0.0))
-                            + F.lit(dangling / n)
-                        )
-                        - ranks.rank
-                    ).alias("delta"),
-                )
-                # truncate the logical plan (module doc). LAZY: the
-                # convergence agg two lines down is the materializing
-                # action, so each iteration launches ONE job instead of
-                # a checkpoint job + an agg job (measured ~2-3% off the
-                # steady iteration).
-                .localCheckpoint(eager=False)
-            )
-            # single aggregate scan: convergence delta + next dangling
-            # mass + total mass. No join — delta is a column.
-            row = new_ranks.agg(
-                F.max("delta").alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)).alias(
-                    "dangling"
-                ),
-                F.sum("rank").alias("mass"),
-            ).collect()[0]
-            delta, dangling = float(row["delta"]), float(row["dangling"])
-            if checkpointer is not None:
-                # an async commit may still be writing the PREVIOUS state;
-                # its blocks must not be freed out from under the writer
-                checkpointer.wait()
-            free_local_checkpoint(ranks)  # release superseded state blocks
-            ranks = new_ranks
-            stats.iterations = it + 1
-            stats.deltas.append(delta)
-            stats.iter_wall_s.append(round(_time.monotonic() - t_iter, 3))
-            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
-                checkpointer.commit(
-                    iteration=it + 1,
-                    state=ranks.select("id", "rank"),
-                    rows=n,
-                    agg_value=float(row["mass"]),
-                    delta_max=delta,
-                )
-            if delta < eff_tol:
-                stats.converged = True
-                break
-
-    if checkpointer is not None:
-        checkpointer.wait()  # the final snapshot must land before return
-    result = ranks.select("id", "rank")
-    edges.unpersist()
-    verts.unpersist()
-    for df in (residual, hub_edges, hub_ids):
-        if df is not None:
-            df.unpersist()
-    return result
+        .groupBy("dst")
+        .agg(F.sum("w").alias("in_sum"))
+    )
+    new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+        F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.lit(prev["dangling"] / n)
+    )
+    new_ranks = ranks.join(
+        contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
+    ).select(
+        ranks.id,
+        ranks.outdeg,
+        new_rank.alias("rank"),
+        F.abs(new_rank - ranks.rank).alias("delta"),
+    )
+    aggs = [
+        F.max("delta").alias("delta"),
+        F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)).alias(
+            "dangling"
+        ),
+        F.sum("rank").alias("mass"),
+    ]
+    return new_ranks, aggs

@@ -18,6 +18,8 @@ Two structural tools:
   threshold); residual edges keep the co-partitioned shuffle-hash path,
   where the per-src row count is bounded by the threshold, so no task
   can be handed more than threshold rows for one key.
+  ``message_edges`` persists the split once for a loop and
+  ``MessageEdges.send`` builds each iteration's message stream over it.
 
 Reference capability donor: the work-queue rebalancing idea
 (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1664-1679) —
@@ -26,8 +28,11 @@ oversized work units are routed to a different execution path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def salted_join(
@@ -83,3 +88,60 @@ def split_hub_edges(
     hub_edges = edges.join(F.broadcast(hubs), "src", "left_semi")
     residual = edges.join(F.broadcast(hubs), "src", "left_anti")
     return residual, hub_edges, hubs.select(F.col("src").alias("id"))
+
+
+@dataclass
+class MessageEdges:
+    """Loop-invariant edge tables a vertex state sends messages over:
+    ``edges`` hash-partitioned by src (the residual when split), plus
+    the balanced hub side when a hub threshold is set."""
+
+    edges: DataFrame
+    hub_edges: DataFrame | None = None
+    hub_ids: DataFrame | None = None
+
+    def send(self, senders: DataFrame, *payload: str | Column) -> DataFrame:
+        """Messages (dst, *payload) along every edge whose src is a
+        ``senders`` row ``id``. ``senders`` is the state (or a filter of
+        it), hash-partitioned by id like ``edges`` by src, so the
+        shuffle_hash join builds over the per-partition state slice with
+        no exchange; sort-merge would re-sort the edges every iteration.
+        Split: hub edges join a BROADCAST slice of the senders (at most
+        |E|/threshold rows) and their messages are unioned in."""
+        e = self.edges
+        msgs = e.join(senders.hint("shuffle_hash"), e.src == senders.id).select(
+            "dst", *payload
+        )
+        if self.hub_edges is None:
+            return msgs
+        hub_slice = senders.join(F.broadcast(self.hub_ids), "id", "left_semi")
+        m_hub = self.hub_edges.join(
+            F.broadcast(hub_slice), self.hub_edges.src == F.col("id")
+        ).select("dst", *payload)
+        return msgs.unionByName(m_hub)
+
+    def unpersist(self) -> None:
+        for df in (self.edges, self.hub_edges, self.hub_ids):
+            if df is not None:
+                df.unpersist()
+
+
+def message_edges(
+    edges: DataFrame, threshold: int | None, num_partitions: int
+) -> MessageEdges:
+    """``edges`` (persisted, hash-partitioned by src) as a loop's message
+    tables: unchanged without a threshold, else split by
+    ``split_hub_edges`` and persisted."""
+    if threshold is None:
+        return MessageEdges(edges)
+    residual, hub_edges, hub_ids = split_hub_edges(edges, threshold)
+    # residual inherits HashPartitioning(src) (broadcast anti-join
+    # preserves the streamed side's partitioning); hub edges get
+    # BALANCED round-robin partitioning — that is the point.
+    residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
+    hub_edges = hub_edges.repartition(num_partitions).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    hub_ids = hub_ids.persist()
+    residual.count(), hub_edges.count(), hub_ids.count()
+    return MessageEdges(residual, hub_edges, hub_ids)

@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -205,7 +205,13 @@ class CheckpointManager:
             pq.write_table(table, os.path.join(meta_dir, fname))
 
     def last_complete(self) -> int | None:
-        """Max complete iteration, or None if no checkpoint exists.
+        """Max complete iteration, or None if no checkpoint exists."""
+        row = self.last_meta()
+        return None if row is None else row["iteration"]
+
+    def last_meta(self) -> Row | None:
+        """The ``_meta`` row of the max complete iteration, or None if no
+        checkpoint exists.
 
         Only "no checkpoint yet" is swallowed; a corrupt/unreadable _meta
         must PROPAGATE — treating it as 'no checkpoint' would silently
@@ -221,12 +227,13 @@ class CheckpointManager:
             if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
                 return None  # dir exists but holds no data yet
             raise
-        row = (
+        rows = (
             meta.filter(F.col("status") == "complete")
-            .agg(F.max("iteration").alias("it"))
-            .collect()[0]
+            .orderBy(F.col("iteration").desc())
+            .limit(1)
+            .collect()
         )
-        return None if row["it"] is None else int(row["it"])
+        return rows[0] if rows else None
 
     def load_state(self, iteration: int) -> DataFrame:
         return self.spark.read.parquet(self._state_dir(iteration))

@@ -192,7 +192,8 @@ def run_pipeline(
     _stage("extract_build_graph", t0)
 
     if "pagerank" in algos:
-        from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+        from rad_ecg_spark.operators.graph_core import LoopStats
+        from rad_ecg_spark.operators.pagerank import pagerank
         from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
         t0 = time.monotonic()
@@ -202,7 +203,7 @@ def run_pipeline(
             else None
         )
         try:
-            st = PageRankStats()
+            st = LoopStats()
             ranks = pagerank(
                 edges, tol=tol, tol_mode=tol_mode, max_iter=max_iter,
                 checkpointer=ck, resume=resume, stats=st,
@@ -236,15 +237,16 @@ def run_pipeline(
         from rad_ecg_spark.operators.components import connected_components
 
         t0 = time.monotonic()
-        cc = connected_components(edges, method="hybrid")
+        cc = connected_components(edges)
         cc.write.mode("overwrite").parquet(os.path.join(out_dir, "components"))
         summary["components"] = cc.select("component").distinct().count()
         _stage("components", t0)
     if "labelprop" in algos:
-        from rad_ecg_spark.operators.labelprop import LabelPropStats, label_propagation
+        from rad_ecg_spark.operators.graph_core import LoopStats
+        from rad_ecg_spark.operators.labelprop import label_propagation
 
         t0 = time.monotonic()
-        lst = LabelPropStats()
+        lst = LoopStats()
         lp = label_propagation(
             edges, max_iter=min(max_iter, 30), stats=lst,
             hub_degree_threshold=hub_degree_threshold,

@@ -90,14 +90,12 @@ def q_pagerank_5iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hybrid: hashmin (the measured 2x fast path on this low-diameter
-    # graph) capped at 12 rounds, star-on-contraction as the worst-case
-    # net — see operators/components.py docstring and BENCH/BASELINE.md
+    # hashmin (the measured 2x fast path on this low-diameter graph)
+    # capped at 12 rounds, star-on-contraction as the worst-case net —
+    # see operators/components.py docstring and BENCH/BASELINE.md
     # dedup=False: the symmetric view's dropDuplicates subsumes it, and
     # every aggregation in the loop is duplicate-insensitive (min)
-    return connected_components(
-        derived_edges(spark, sf_dir, dedup=False), method="hybrid"
-    )
+    return connected_components(derived_edges(spark, sf_dir, dedup=False))
 
 
 def q_labelprop_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:

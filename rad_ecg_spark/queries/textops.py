@@ -18,6 +18,7 @@ from rad_ecg_spark.functions.textstats import (
     quality_score,
     stopword_count,
 )
+from rad_ecg_spark.operators.graph_core import session_partitions
 from rad_ecg_spark.operators.dedup import (
     MERSENNE31,
     MINHASH_PARAMS,
@@ -45,7 +46,7 @@ def _spread(df, *cols):
     and sketch queries at sf1.0. On a many-file table at 100 TB the
     scan is already parallel; this helper is for the known-single-file
     registry inputs."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = session_partitions(df.sparkSession)
     return df.repartition(n, *cols)
 
 

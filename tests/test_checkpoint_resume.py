@@ -7,7 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+from rad_ecg_spark.operators.graph_core import LoopStats
+from rad_ecg_spark.operators.pagerank import pagerank
 from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
 from .conftest import edges_df
@@ -21,14 +22,14 @@ class TestCheckpointResume:
 
         # "killed" after 3 iterations
         cm = CheckpointManager(spark, ckdir, "pagerank")
-        s1 = PageRankStats()
+        s1 = LoopStats()
         pagerank(edges_df(spark, pairs), tol=0.0, max_iter=3,
                  checkpointer=cm, stats=s1)
         assert cm.last_complete() == 3
 
         # resume to iteration 8
         cm2 = CheckpointManager(spark, ckdir, "pagerank")
-        s2 = PageRankStats()
+        s2 = LoopStats()
         resumed = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8,
                            checkpointer=cm2, resume=True, stats=s2)
         assert s2.resumed_from == 3
@@ -58,7 +59,7 @@ class TestCheckpointResume:
     def test_resume_without_checkpoint_starts_fresh(self, spark, tmp_path):
         pairs = random_graph(20, 60, seed=13)
         cm = CheckpointManager(spark, str(tmp_path / "empty"), "pagerank")
-        s = PageRankStats()
+        s = LoopStats()
         pagerank(edges_df(spark, pairs), tol=0.0, max_iter=2,
                  checkpointer=cm, resume=True, stats=s)
         assert s.resumed_from is None
@@ -87,7 +88,7 @@ class TestCheckpointResume:
         assert diff == 0.0
         # resume from the async-written checkpoint
         cm2 = CheckpointManager(spark, ckdir, "pagerank", async_write=True)
-        s2 = PageRankStats()
+        s2 = LoopStats()
         resumed = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=7,
                            checkpointer=cm2, resume=True, stats=s2)
         assert s2.resumed_from == 4 and s2.iterations == 7
@@ -112,7 +113,7 @@ class TestCheckpointResume:
         assert [r["iteration"] for r in meta] == [2, 4]
         assert cm.last_complete() == 4
         cm2 = CheckpointManager(spark, ckdir, "pagerank")
-        s2 = PageRankStats()
+        s2 = LoopStats()
         resumed = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8,
                            checkpointer=cm2, resume=True, stats=s2,
                            checkpoint_every=2)
@@ -163,3 +164,30 @@ class TestCheckpointResume:
 
         with _pytest.raises(Exception):
             bad.wait()
+
+    def test_resume_of_finished_run_runs_no_iteration(self, spark, tmp_path):
+        """Resuming a run that already converged, or already reached
+        max_iter, with the same arguments returns the first run's ranks
+        bitwise, its iteration count and its converged flag (the
+        reference's skip-if-done)."""
+        pairs = random_graph(5, 12, seed=3)
+        cases = (
+            ("converged", dict(damping=0.5, tol=1e-6, max_iter=100)),
+            ("max_iter", dict(tol=0.0, max_iter=4)),
+        )
+        for name, kw in cases:
+            ckdir = str(tmp_path / name)
+            s1, s2 = LoopStats(), LoopStats()
+            first = pagerank(edges_df(spark, pairs), stats=s1, resume=True,
+                             checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+                             **kw)
+            first = {r["id"]: r["rank"] for r in first.collect()}
+            again = pagerank(edges_df(spark, pairs), stats=s2, resume=True,
+                             checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+                             **kw)
+            again = {r["id"]: r["rank"] for r in again.collect()}
+            assert s1.converged == (name == "converged")
+            assert s2.resumed_from == s1.iterations
+            assert (s2.iterations, s2.converged) == (s1.iterations, s1.converged)
+            assert s2.iter_wall_s == []  # no iteration ran
+            assert again == first

@@ -10,9 +10,9 @@ import numpy as np
 import pytest
 
 from rad_ecg_spark.operators.components import connected_components
-from rad_ecg_spark.operators.graph_core import encode_vertices
+from rad_ecg_spark.operators.graph_core import LoopStats, encode_vertices
 from rad_ecg_spark.operators.labelprop import label_propagation
-from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+from rad_ecg_spark.operators.pagerank import pagerank
 from rad_ecg_spark.operators.triangles import triangle_count, triangles
 
 from .conftest import edges_df
@@ -28,6 +28,11 @@ RING = [(i, (i + 1) % 6) for i in range(6)]
 K4 = [(a, b) for a in range(4) for b in range(4) if a != b]
 CHAIN_DANGLING = [(0, 1), (1, 2), (2, 3)]  # 3 has no outlinks
 ISLANDS = [(0, 1), (1, 2), (10, 11), (20, 21), (21, 22), (22, 20)]
+# connected_components phases by hashmin cap: 0 = star on the original
+# graph, 50 = hashmin to convergence, 12 (the default) = hybrid
+CC_ROUNDS = pytest.mark.parametrize(
+    "hashmin_rounds", [0, 50, 12], ids=["star", "hashmin", "hybrid"]
+)
 
 
 def _rank_map(df):
@@ -36,7 +41,7 @@ def _rank_map(df):
 
 class TestPageRank:
     def test_ring_uniform_converges_first_iteration(self, spark):
-        stats = PageRankStats()
+        stats = LoopStats()
         ranks = _rank_map(pagerank(edges_df(spark, RING), tol=1e-9, stats=stats))
         assert len(ranks) == 6
         assert stats.converged
@@ -46,7 +51,7 @@ class TestPageRank:
     def test_dangling_chain_trajectory(self, spark):
         # exact fixed-iteration trajectory match vs oracle: same update
         # rule => same numbers to fp precision, no need to run 100+ iters
-        stats = PageRankStats()
+        stats = LoopStats()
         got = _rank_map(
             pagerank(edges_df(spark, CHAIN_DANGLING), tol=0.0, max_iter=25, stats=stats)
         )
@@ -67,7 +72,7 @@ class TestPageRank:
     def test_convergence_matches_oracle_fixpoint(self, spark):
         # damping 0.5 mixes fast enough to hit 1e-7 in ~25 iterations
         pairs = random_graph(40, 200, seed=8)
-        stats = PageRankStats()
+        stats = LoopStats()
         got = _rank_map(
             pagerank(edges_df(spark, pairs), damping=0.5, tol=1e-7, stats=stats)
         )
@@ -85,7 +90,7 @@ class TestPageRank:
         pairs = random_graph(80, 400, seed=11)
         iters = {}
         for mode in ("abs", "rel"):
-            stats = PageRankStats()
+            stats = LoopStats()
             got = _rank_map(
                 pagerank(edges_df(spark, pairs), tol=1e-6, tol_mode=mode, stats=stats)
             )
@@ -123,29 +128,33 @@ class TestPageRank:
 
 
 class TestConnectedComponents:
-    @pytest.mark.parametrize("method", ["star", "hashmin", "hybrid"])
-    def test_islands_exact(self, spark, method):
+    @CC_ROUNDS
+    def test_islands_exact(self, spark, hashmin_rounds):
         got = {
             r["id"]: r["component"]
-            for r in connected_components(edges_df(spark, ISLANDS), method=method).collect()
+            for r in connected_components(
+                edges_df(spark, ISLANDS), hashmin_rounds=hashmin_rounds
+            ).collect()
         }
         exp = components_oracle(ISLANDS)
         assert got == exp
 
-    @pytest.mark.parametrize("method", ["star", "hashmin", "hybrid"])
-    def test_random_graph(self, spark, method):
+    @CC_ROUNDS
+    def test_random_graph(self, spark, hashmin_rounds):
         pairs = random_graph(80, 90, seed=3)  # sparse -> many components
         got = {
             r["id"]: r["component"]
-            for r in connected_components(edges_df(spark, pairs), method=method).collect()
+            for r in connected_components(
+                edges_df(spark, pairs), hashmin_rounds=hashmin_rounds
+            ).collect()
         }
         exp = components_oracle(pairs)
         assert got == exp
 
     def test_methods_agree(self, spark):
         pairs = random_graph(50, 60, seed=11)
-        a = connected_components(edges_df(spark, pairs), method="star")
-        b = connected_components(edges_df(spark, pairs), method="hashmin")
+        a = connected_components(edges_df(spark, pairs), hashmin_rounds=0)
+        b = connected_components(edges_df(spark, pairs), hashmin_rounds=50)
         assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
 
 
@@ -159,7 +168,7 @@ class TestConnectedComponents:
         got = {
             r["id"]: r["component"]
             for r in connected_components(
-                edges_df(spark, pairs), method="hybrid", hashmin_rounds=rounds
+                edges_df(spark, pairs), hashmin_rounds=rounds
             ).collect()
         }
         assert got == components_oracle(pairs)
@@ -174,7 +183,7 @@ class TestConnectedComponents:
         got = {
             r["id"]: r["component"]
             for r in connected_components(
-                edges_df(spark, pairs), method="hybrid", hashmin_rounds=3
+                edges_df(spark, pairs), hashmin_rounds=3
             ).collect()
         }
         exp = components_oracle(pairs)

@@ -139,14 +139,12 @@ class TestSkewAwarePageRank:
         plan (messages are exact (dst, label) rows into an integer
         count — no float reordering), including per-round change
         counts."""
-        from rad_ecg_spark.operators.labelprop import (
-            LabelPropStats,
-            label_propagation,
-        )
+        from rad_ecg_spark.operators.graph_core import LoopStats
+        from rad_ecg_spark.operators.labelprop import label_propagation
         from rad_ecg_spark.sources.synth_graph import synth_edges
 
         e = synth_edges(spark, 100_000, partitions=4, src_skew="powerlaw")
-        s1, s2 = LabelPropStats(), LabelPropStats()
+        s1, s2 = LoopStats(), LoopStats()
         base = label_propagation(e, max_iter=4, stats=s1)
         split = label_propagation(
             e, max_iter=4, stats=s2, hub_degree_threshold=500
@@ -154,7 +152,7 @@ class TestSkewAwarePageRank:
         d = base.withColumnRenamed("label", "l2").join(split, "id")
         assert d.count() == base.count()
         assert d.filter(F.col("label") != F.col("l2")).count() == 0
-        assert s1.changes == s2.changes
+        assert s1.deltas == s2.deltas
 
     def test_salted_join_matches_plain_join(self, spark):
         from rad_ecg_spark.operators.skew import salted_join
@@ -196,7 +194,8 @@ class TestPartwiseCheckpoint:
         assert back.agg(F.sum("rank")).collect()[0][0] == df.agg(F.sum("rank")).collect()[0][0]
 
     def test_pagerank_resume_with_partwise_manager(self, spark, tmp_path):
-        from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+        from rad_ecg_spark.operators.graph_core import LoopStats
+        from rad_ecg_spark.operators.pagerank import pagerank
         from rad_ecg_spark.plans.partwise import PartwiseCheckpointManager
 
         edges = spark.createDataFrame(
@@ -211,7 +210,7 @@ class TestPartwiseCheckpoint:
         pagerank(edges, tol=0.0, max_iter=3, checkpointer=cp1).count()
         assert cp1.last_complete() == 3
         cp2 = PartwiseCheckpointManager(spark, root, "pr")
-        st = PageRankStats()
+        st = LoopStats()
         resumed = {
             r["id"]: r["rank"]
             for r in pagerank(

@@ -1,10 +1,14 @@
 """Iterative-loop plan audit: PROVE the one-exchange-per-iteration
 claims by walking the physical plan tree of a steady-state iteration.
 
-Counts ShuffleExchange nodes reachable without descending into cached
-(InMemoryTableScan) or checkpointed (ExistingRDD) subtrees — i.e. the
-shuffles a steady-state iteration actually pays. Appends the results to
-PLANS.md and exits non-zero on violation.
+Each plan is built by the operators' own setup and step functions (the
+ones graph_core.iterate runs): the first iteration is run and
+checkpointed, so the audited plan is a step over a checkpointed step
+output, exactly as inside the loop. Counts ShuffleExchange nodes
+reachable without descending into cached (InMemoryTableScan) or
+checkpointed (ExistingRDD) subtrees — i.e. the shuffles a steady-state
+iteration actually pays. Appends the results to PLANS.md and exits
+non-zero on violation.
 
 Usage: python tools/audit_loops.py
 """
@@ -13,194 +17,28 @@ from __future__ import annotations
 
 import os
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-from pyspark.storagelevel import StorageLevel  # noqa: E402
+from pyspark.sql import Row  # noqa: E402
+
+EXCHANGE_BUDGET = 1
+# the hub split adds broadcasts whose shape is asserted nowhere else:
+# <= 3 broadcasts (hub_ids semi-join build, hub slice, at most one
+# planner-chosen extra). Sorts: min_by's struct buffer plans as a
+# partial+final SortAggregate pair (2 sorts) + one sort under the final
+# agg — measured equivalent to hash-aggregable rewrites
+# (OPTIMIZATION_r06.md §12b); the budget forbids anything MORE (e.g. a
+# sort-merge join sneaking into the loop).
+HUB_SPLIT_BUDGETS = {"BroadcastExchange": 3, "Sort": 3}
+HUB_THRESHOLD = 50
 
 
-def count_live_exchanges(df) -> tuple[int, list[str]]:
-    """(#shuffle exchanges, node names) outside cached subtrees."""
-    hits: list[str] = []
-
-    def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name.startswith("InMemoryTableScan"):
-            return  # cached: its build cost was paid once at persist time
-        if name.startswith("ShuffleExchange"):
-            hits.append(node.nodeName())
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return len(hits), hits
-
-
-def pagerank_iteration_plan(spark, P=4):
-    from rad_ecg_spark.sources.synth_graph import synth_edges
-
-    edges = (
-        synth_edges(spark, 100_000, partitions=P)
-        .repartition(P, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
-            F.col("id") == F.col("src"),
-            "left",
-        )
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = verts.count()
-    ranks = verts.select(
-        "id", "outdeg", (F.lit(1.0) / n).alias("rank")
-    ).localCheckpoint(eager=True)
-    # run one real iteration so the audited plan is the STEADY state
-    # (ranks = a checkpointed join output, exactly like inside the loop)
-    for _ in range(1):
-        contribs = (
-            edges.join(
-                ranks.filter(F.col("outdeg") > 0).hint("shuffle_hash"),
-                edges.src == ranks.id,
-            )
-            .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-            .groupBy("dst")
-            .agg(F.sum("w").alias("in_sum"))
-        )
-        newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-        ranks = (
-            ranks.join(contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left")
-            .select(ranks.id, ranks.outdeg, newr.alias("rank"),
-                    F.abs(newr - ranks.rank).alias("delta"))
-            .localCheckpoint(eager=True)
-        )
-    contribs = (
-        edges.join(
-            ranks.filter(F.col("outdeg") > 0).hint("shuffle_hash"),
-            edges.src == ranks.id,
-        )
-        .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        .groupBy("dst")
-        .agg(F.sum("w").alias("in_sum"))
-    )
-    newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-    return ranks.join(
-        contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
-    ).select(ranks.id, ranks.outdeg, newr.alias("rank"),
-             F.abs(newr - ranks.rank).alias("delta"))
-
-
-def labelprop_round_plan(spark, P=4):
-    from rad_ecg_spark.operators.graph_core import (
-        normalize_edges,
-        symmetrize,
-        vertices_of,
-    )
-    from rad_ecg_spark.sources.synth_graph import synth_edges
-
-    e = synth_edges(spark, 100_000, partitions=P)
-    sym = (
-        symmetrize(normalize_edges(e))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
-    labels = (
-        vertices_of(e)
-        .select("id", F.col("id").alias("label"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-
-    def one_round(labels):
-        msgs = sym.join(labels.hint("shuffle_hash"), sym.src == labels.id).select(
-            "dst", "label"
-        )
-        counts = (
-            msgs.repartition(P, "dst")
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = counts.groupBy("dst").agg(
-            F.min_by(
-                "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
-            ).alias("new_label")
-        )
-        return labels.join(
-            best.hint("shuffle_hash"), labels.id == best.dst, "left"
-        ).select(labels.id, F.coalesce(F.col("new_label"), labels.label).alias("label"))
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
-
-
-def hashmin_round_plan(spark, P=4):
-    """One steady-state round of connected-components hashmin — the
-    common-case phase of the hybrid method (operators/components.py):
-    sym edges persisted+partitioned once, labels checkpointed, so a
-    round pays only the join/agg exchange."""
-    from rad_ecg_spark.operators.graph_core import (
-        normalize_edges,
-        symmetrize,
-        vertices_of,
-    )
-    from rad_ecg_spark.sources.synth_graph import synth_edges
-
-    e = synth_edges(spark, 100_000, partitions=P)
-    sym = (
-        symmetrize(normalize_edges(e))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
-    labels = (
-        vertices_of(e)
-        .select(
-            "id",
-            F.col("id").alias("component"),
-            F.lit(1).cast("long").alias("changed"),
-        )
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-
-    def one_round(labels):
-        # frontier propagation (round 6): messages only from vertices
-        # whose label changed last round — same plan shape, smaller stream
-        frontier = labels.filter(F.col("changed") == 1).select("id", "component")
-        msgs = sym.join(
-            frontier.hint("shuffle_hash"), sym.src == frontier.id
-        ).select("dst", "component")
-        nbr_min = msgs.groupBy("dst").agg(F.min("component").alias("nbr_min"))
-        new_comp = F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        )
-        return labels.join(
-            nbr_min.hint("shuffle_hash"), labels.id == nbr_min.dst, "left"
-        ).select(
-            "id",
-            new_comp.alias("component"),
-            (new_comp != F.col("component")).cast("long").alias("changed"),
-        )
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
-
-
-def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, int]:
-    """Count live plan nodes by class-name prefix, skipping cached
-    subtrees (same walk as count_live_exchanges)."""
-    counts = {p: 0 for p in prefixes}
+def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, list[str]]:
+    """Live plan nodes by class-name prefix, outside cached subtrees
+    (their build cost was paid once at persist time)."""
+    hits: dict[str, list[str]] = {p: [] for p in prefixes}
 
     def walk(node) -> None:
         name = node.getClass().getSimpleName()
@@ -208,122 +46,98 @@ def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, int]:
             return
         for p in prefixes:
             if name.startswith(p):
-                counts[p] += 1
+                hits[p].append(node.nodeName())
         it = node.children().iterator()
         while it.hasNext():
             walk(it.next())
 
     walk(df._jdf.queryExecution().executedPlan())
-    return counts
+    return hits
 
 
-def _hub_split_inputs(spark, P=4, threshold=50):
-    """Shared fixture for the hub-split steady audits: a synthetic graph
-    with its edges split into residual (co-partitioned) and hub
-    (balanced) tables, exactly as pagerank/labelprop do."""
-    from rad_ecg_spark.operators.skew import split_hub_edges
+def _steady(state, step, prev=None):
+    """The plan of iteration 2: iteration 1 runs and is checkpointed."""
+    state, _ = step(state.localCheckpoint(eager=True), prev)
+    nxt, _ = step(state.localCheckpoint(eager=True), prev)
+    return nxt
+
+
+def _pagerank_plan(edges, P, threshold=None):
+    from rad_ecg_spark.operators import pagerank as pr
+    from rad_ecg_spark.operators.graph_core import LoopStats
+    from rad_ecg_spark.operators.skew import message_edges
+
+    st = LoopStats()
+    edges, verts, P = pr._setup(edges, P, st)
+    n = st.num_vertices
+    step = partial(
+        pr._step, msgs=message_edges(edges, threshold, P), n=n, damping=0.85
+    )
+    return _steady(pr._initial_ranks(verts, n), step, Row(dangling=0.0))
+
+
+def _labelprop_plan(edges, P, threshold=None):
+    from rad_ecg_spark.operators import labelprop as lp
+    from rad_ecg_spark.operators.skew import message_edges
+
+    sym, labels, P = lp._setup(edges, P)
+    msgs = message_edges(sym, threshold, P)
+    return _steady(labels, partial(lp._step, msgs=msgs, num_partitions=P))
+
+
+def _hashmin_plan(edges, P):
+    """The common-case phase of connected_components."""
+    from rad_ecg_spark.operators import components as cc
+    from rad_ecg_spark.operators.graph_core import normalize_edges, vertices_of
+    from rad_ecg_spark.operators.skew import MessageEdges
+
+    edges = normalize_edges(edges).persist()
+    labels, sym = cc._hashmin_setup(edges, vertices_of(edges).persist(), P)
+    return _steady(labels, partial(cc._hashmin_step, sym=MessageEdges(sym.persist())))
+
+
+def audit(spark, n_edges: int = 100_000, P: int = 4) -> list[dict]:
+    """The five steady-state loop plans on a ``synth_edges`` graph, each
+    with its live node counts and verdict. Plan shape does not depend on
+    ``n_edges``: every loop join is hinted and the audit session runs
+    with AQE off, as the loops do."""
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    edges = (
-        synth_edges(spark, 100_000, partitions=P)
-        .repartition(P, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    edges = synth_edges(spark, n_edges, partitions=P)
+    plans = (
+        ("pagerank_steady_iteration", _pagerank_plan(edges, P)),
+        ("labelprop_steady_round", _labelprop_plan(edges, P)),
+        ("cc_hashmin_steady_round", _hashmin_plan(edges, P)),
+        ("pagerank_hubsplit_steady", _pagerank_plan(edges, P, HUB_THRESHOLD)),
+        ("lp_hubsplit_steady", _labelprop_plan(edges, P, HUB_THRESHOLD)),
     )
-    edges.count()
-    residual, hub_edges, hub_ids = split_hub_edges(edges, threshold)
-    residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-    hub_edges = hub_edges.repartition(P).persist(StorageLevel.MEMORY_AND_DISK)
-    hub_ids = hub_ids.persist()
-    residual.count(), hub_edges.count(), hub_ids.count()
-    return edges, residual, hub_edges, hub_ids
+    results = []
+    for name, df in plans:
+        hits = count_live_nodes(df, ("ShuffleExchange", *HUB_SPLIT_BUDGETS))
+        r = {"name": name, "exchanges": hits["ShuffleExchange"], "over": []}
+        if len(r["exchanges"]) > EXCHANGE_BUDGET:
+            r["over"].append(f"exchange budget {EXCHANGE_BUDGET} exceeded")
+        if "hubsplit" in name:
+            r["nodes"] = {k: len(hits[k]) for k in HUB_SPLIT_BUDGETS}
+            for k, budget in HUB_SPLIT_BUDGETS.items():
+                if r["nodes"][k] > budget:
+                    r["over"].append(f"{k} budget {budget} exceeded")
+        results.append(r)
+    return results
 
 
-def pagerank_hubsplit_steady_plan(spark, P=4):
-    """One steady-state iteration of the hub-split PageRank path
-    (operators/pagerank.py hub_degree_threshold): residual keeps the
-    co-partitioned shuffle-hash join, hub edges join a BROADCAST rank
-    slice, the union feeds one partial-agg exchange. Expected: 1 live
-    shuffle exchange + broadcasts, no extra sort (r05 VERDICT #6)."""
-    edges, residual, hub_edges, hub_ids = _hub_split_inputs(spark, P)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
-            F.col("id") == F.col("src"),
-            "left",
+def describe(r: dict) -> str:
+    extra = ""
+    if "nodes" in r:
+        extra = (
+            f"; broadcasts={r['nodes']['BroadcastExchange']}"
+            f" sorts={r['nodes']['Sort']}"
         )
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    over = f" ({', '.join(r['over'])})" if r["over"] else ""
+    return (
+        f"{r['name']}: **{len(r['exchanges'])}** (budget {EXCHANGE_BUDGET})"
+        f" — {r['exchanges']}{extra}{over} — {'FAIL' if r['over'] else 'OK'}"
     )
-    n = verts.count()
-    ranks = verts.select(
-        "id", "outdeg", (F.lit(1.0) / n).alias("rank")
-    ).localCheckpoint(eager=True)
-
-    def one_iter(ranks):
-        active = ranks.filter(F.col("outdeg") > 0)
-        hub_slice = active.join(F.broadcast(hub_ids), "id", "left_semi")
-        m_rest = residual.join(
-            active.hint("shuffle_hash"), residual.src == ranks.id
-        ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        m_hub = hub_edges.join(
-            F.broadcast(hub_slice), hub_edges.src == F.col("id")
-        ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        contribs = (
-            m_rest.unionByName(m_hub).groupBy("dst").agg(F.sum("w").alias("in_sum"))
-        )
-        newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-        return ranks.join(
-            contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
-        ).select(ranks.id, ranks.outdeg, newr.alias("rank"))
-
-    ranks = one_iter(ranks).localCheckpoint(eager=True)  # warm to steady state
-    return one_iter(ranks)
-
-
-def labelprop_hubsplit_steady_plan(spark, P=4):
-    """One steady-state round of the hub-split label-propagation path
-    (operators/labelprop.py hub_degree_threshold). Expected: 1 live
-    shuffle exchange + broadcasts, no extra sort (r05 VERDICT #6)."""
-    from rad_ecg_spark.operators.graph_core import vertices_of
-
-    edges, residual, hub_edges, hub_ids = _hub_split_inputs(spark, P)
-    labels = (
-        vertices_of(edges)
-        .select("id", F.col("id").alias("label"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-
-    def one_round(labels):
-        hub_slice = labels.join(F.broadcast(hub_ids), "id", "left_semi")
-        m_rest = residual.join(
-            labels.hint("shuffle_hash"), residual.src == labels.id
-        ).select("dst", "label")
-        m_hub = hub_edges.join(
-            F.broadcast(hub_slice), hub_edges.src == F.col("id")
-        ).select("dst", "label")
-        counts = (
-            m_rest.unionByName(m_hub)
-            .repartition(P, "dst")
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = counts.groupBy("dst").agg(
-            F.min_by(
-                "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
-            ).alias("new_label")
-        )
-        return labels.join(
-            best.hint("shuffle_hash"), labels.id == best.dst, "left"
-        ).select(labels.id, F.coalesce(F.col("new_label"), labels.label).alias("label"))
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
 
 
 def main() -> None:
@@ -338,55 +152,19 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    results = []
-    failures = []
-    for name, df, budget in (
-        ("pagerank_steady_iteration", pagerank_iteration_plan(spark), 1),
-        ("labelprop_steady_round", labelprop_round_plan(spark), 1),
-        ("cc_hashmin_steady_round", hashmin_round_plan(spark), 1),
-        ("pagerank_hubsplit_steady", pagerank_hubsplit_steady_plan(spark), 1),
-        ("lp_hubsplit_steady", labelprop_hubsplit_steady_plan(spark), 1),
-    ):
-        n, hits = count_live_exchanges(df)
-        ok = n <= budget
-        extra = ""
-        if name.endswith("hubsplit_steady"):
-            # r05 VERDICT #6: the split path adds broadcasts whose shape
-            # was asserted nowhere — budget them explicitly (<= 3: hub_ids
-            # semi-join build, hub slice, and at most one planner-chosen
-            # extra) and forbid sorts (no SMJ regressions in the loop).
-            nodes = count_live_nodes(df, ("BroadcastExchange", "Sort"))
-            extra = f"; broadcasts={nodes['BroadcastExchange']} sorts={nodes['Sort']}"
-            if nodes["BroadcastExchange"] > 3:
-                ok = False
-                extra += " (broadcast budget 3 exceeded)"
-            # min_by's struct buffer plans as a partial+final
-            # SortAggregate pair (2 sorts) + one sort under the final
-            # agg — measured equivalent to hash-aggregable rewrites
-            # (OPTIMIZATION_r06.md §12b); budget forbids anything MORE
-            # (e.g. a sort-merge join sneaking into the loop)
-            if nodes["Sort"] > 3:
-                ok = False
-                extra += " (sort budget 3 exceeded: SMJ in steady loop?)"
-        results.append((name, n, budget, hits if not extra else hits + [extra], ok))
-        if not ok:
-            failures.append(name)
-        print(
-            ("PASS " if ok else "FAIL ")
-            + f"{name}: {n} live exchange(s) (budget {budget}): {hits}{extra}"
-        )
-
+    results = audit(spark)
+    for r in results:
+        print(describe(r).replace("**", ""))
     lines = [
         "\n## Iterative-loop exchange audit (tools/audit_loops.py)\n",
         "Live ShuffleExchange nodes in one STEADY-STATE iteration plan",
         "(cached/checkpointed subtrees excluded — their cost was paid once):\n",
     ]
-    for name, n, budget, hits, ok in results:
-        lines.append(f"- {name}: **{n}** (budget {budget}) — {hits} — {'OK' if ok else 'FAIL'}")
+    lines += [f"- {describe(r)}" for r in results]
     with open("PLANS.md", "a") as f:
         f.write("\n".join(lines) + "\n")
     print("appended loop audit to PLANS.md")
-    if failures:
+    if any(r["over"] for r in results):
         sys.exit(1)
 
 

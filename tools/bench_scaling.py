@@ -40,7 +40,8 @@ RUNNER = r"""
 import glob, gzip, json, os, sys
 from rad_ecg_spark.session import get_spark
 from rad_ecg_spark.sources.synth_graph import synth_edges
-from rad_ecg_spark.operators.pagerank import pagerank, PageRankStats
+from rad_ecg_spark.operators.graph_core import LoopStats
+from rad_ecg_spark.operators.pagerank import pagerank
 
 cpus, n_edges, iters, parts = (int(a) for a in sys.argv[1:5])
 evdir = f"/tmp/spark-events-{os.getpid()}"
@@ -54,7 +55,7 @@ spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=parts,
 spark.sparkContext.setLogLevel("ERROR")
 edges = synth_edges(spark, n_edges, partitions=parts)
 edges.count()
-st = PageRankStats()
+st = LoopStats()
 pagerank(edges, tol=0.0, max_iter=iters, num_partitions=parts, stats=st).count()
 app_id = spark.sparkContext.applicationId
 spark.stop()

@@ -167,9 +167,9 @@ def audit_triangle_wedges(spark, sf_dir: str) -> tuple[list[str], list[str]]:
     # live exchanges only: walk the tree, don't descend into cached
     # subtrees (the string repr re-embeds the cached build plan once
     # per InMemoryTableScan reference, inflating a naive string count)
-    from tools.audit_loops import count_live_exchanges
+    from tools.audit_loops import count_live_nodes
 
-    n_ex, _ = count_live_exchanges(closed)
+    n_ex = len(count_live_nodes(closed, ("ShuffleExchange",))["ShuffleExchange"])
     o.unpersist()
     probs = []
     if n_ex > 3:
