@@ -17,7 +17,7 @@ wall-clock seconds for representative queries at $SPARK_GRAFT_SF_DIR.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     (default 32)
+  SPARK_GRAFT_CPUS     (default: the CPUs this process may run on)
   BENCH_EDGES          (default 10_000_000)
   BENCH_PR_ITERS       (default 5)
   BENCH_DETAIL_OUT     (default <repo>/BENCH/detail_latest.json)
@@ -84,11 +84,11 @@ def _load1() -> float | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     n_edges = int(os.environ.get("BENCH_EDGES", "10000000"))
     pr_iters = int(os.environ.get("BENCH_PR_ITERS", "5"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
-    load1_start = _load1()  # BEFORE our own JVM adds its 32 threads
+    load1_start = _load1()  # BEFORE our own JVM adds its threads
 
     spark = get_spark(
         app_name="bench", master=f"local[{cpus}]", shuffle_partitions=cpus

@@ -13,19 +13,21 @@ exchange, so the idiomatic halo exchange is (1) a parallelism-invariant
 global row number rn (range partition + per-partition offsets — never a
 single-partition window), (2) each boundary row DUPLICATED into the
 neighboring chunk's group with own=false, (3) ONE shuffle by chunk id
-into ``applyInPandas``, where the vectorized kernel computes over
-own+halo rows and emits only own rows. Chunks are defined by rn, so
-results are invariant to the physical partition count (property-tested)
-and to the chunk size (for the rolling median — exact equivalence to
-the global window; for MP the section IS the semantic unit, as in the
-reference).
+into ``operators.sweep.sweep_key_runs``, where the vectorized kernel
+computes over each chunk's own+halo rows and emits only own rows.
+Chunks are defined by rn, so results are invariant to the physical
+partition count (property-tested) and to the chunk size (for the
+rolling median — exact equivalence to the global window; for MP the
+section IS the semantic unit, as in the reference).
 
 At 100 TB: rows move exactly twice (range exchange for rn, chunk
-exchange for the kernel) plus a P-row offsets job; per-task memory is
-chunk_rows + halo for the median and the blocked-NN buffer cap for MP
-(operators/matrixprofile.py). Aligning chunk boundaries to the range
-partitions would remove the second exchange; kept separate here so the
-chunk size is a semantic knob, not a physical one.
+exchange for the kernel) plus a P-row offsets job; per-call memory is
+the sweep's contract (one Arrow batch plus the largest chunk,
+chunk_rows + halo; see ``sweep_key_runs``), plus the blocked-NN
+buffer cap for MP (operators/matrixprofile.py). Aligning chunk
+boundaries to the range partitions would remove the second exchange;
+kept separate here so the chunk size is a semantic knob, not a physical
+one.
 """
 
 from __future__ import annotations
@@ -36,12 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.operators.graph_core import session_partitions
+from rad_ecg_spark.operators.sweep import each_run, sweep_key_runs
 
 
 def global_row_number(
     df: DataFrame,
     order_cols: list[str],
-    n_parts: int = 32,
+    n_parts: int,
 ) -> DataFrame:
     """Adds ``rn`` (1-based, dense, by ``order_cols``) without ever
     funneling the series through one task: range-partition + sort within
@@ -53,11 +56,7 @@ def global_row_number(
     the CHECKPOINTED layout: its documented contract is partition id in
     the upper bits and the consecutive record number within the
     partition in the lower 33 bits, so ``mid & (2^33 - 1)`` is the
-    intra-partition row index (valid below 2^33 ≈ 8.5B rows/partition).
-    Round 6: this replaces a mapInPandas pass that shipped every row
-    JVM→Python→JVM just to add two integers (guide §4.1: stay in the
-    JVM when built-ins suffice) — measured ~0.7 s off each halo query
-    at sf1.0."""
+    intra-partition row index (valid below 2^33 ≈ 8.5B rows/partition)."""
     d = (
         df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -112,42 +111,10 @@ def with_halo_chunks(
     )
 
 
-def _sweep_chunks(chunked: DataFrame, kernel_one, schema: str) -> DataFrame:
-    """Halo-exchange driver: repartition by chunk id, sort within
-    partitions, then ONE mapInPandas pass that slices each chunk's
-    contiguous block and applies ``kernel_one``.
-
-    Round 6 (guide §4.1): replaces ``groupBy("chunk").applyInPandas``,
-    which frames one Arrow batch + one Python call per chunk — ~2k
-    chunks at sf1.0 paid more in per-group framing than in kernel
-    compute. Same shuffle (one exchange by chunk), same sorted per-chunk
-    rows into the same kernel — identical outputs.
-    """
-    spark = chunked.sparkSession
-    n_parts = session_partitions(spark)
-
-    def sweep(batches):
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return  # empty partition: emit nothing
-        pdf = pd.concat(frames, ignore_index=True)
-        ch = pdf["chunk"].to_numpy()
-        bounds = np.flatnonzero(np.r_[True, ch[1:] != ch[:-1], True])
-        outs = [kernel_one(pdf.iloc[a:b]) for a, b in zip(bounds[:-1], bounds[1:])]
-        yield pd.concat(outs, ignore_index=True)
-
-    return (
-        chunked.repartition(n_parts, "chunk")
-        .sortWithinPartitions("chunk", "rn")
-        .mapInPandas(sweep, schema=schema)
-    )
-
-
 def halo_rolling_median(
     events: DataFrame,
     h: int = 3,
     chunk_rows: int = 512,
-    n_parts: int = 32,
     ts_col: str = "ts",
     id_col: str = "event_id",
     value_col: str = "value",
@@ -163,7 +130,9 @@ def halo_rolling_median(
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
         F.col(value_col).cast("double").alias("v"),
     )
-    rn = global_row_number(series, ["ts_ms", "eid"], n_parts)
+    rn = global_row_number(
+        series, ["ts_ms", "eid"], session_partitions(events.sparkSession)
+    )
     # ts_ms is dead once rn exists — drop it before the chunk exchange
     # (guide §2.3: project before the exchange)
     chunked = with_halo_chunks(
@@ -189,9 +158,9 @@ def halo_rolling_median(
             }
         )
 
-    return _sweep_chunks(chunked, kernel, schema).select(
-        F.col("eid").alias("event_id"), "roll_med_c"
-    )
+    return sweep_key_runs(
+        chunked, "chunk", ["rn"], each_run(kernel, "chunk"), schema
+    ).select(F.col("eid").alias("event_id"), "roll_med_c")
 
 
 def halo_rolling_median_oracle_sql(h: int = 3) -> str:
@@ -208,7 +177,6 @@ def halo_mp_discord(
     events: DataFrame,
     w: int = 8,
     chunk_rows: int = 512,
-    n_parts: int = 32,
     ts_col: str = "ts",
     id_col: str = "event_id",
     value_col: str = "value",
@@ -237,7 +205,9 @@ def halo_mp_discord(
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
         F.round(F.col(value_col) * 100).cast("long").alias("cents"),
     )
-    rn = global_row_number(series, ["ts_ms", "eid"], n_parts)
+    rn = global_row_number(
+        series, ["ts_ms", "eid"], session_partitions(events.sparkSession)
+    )
     # ts_ms and eid are dead once rn exists (the kernel keys on rn) —
     # drop them before the chunk exchange (guide §2.3)
     chunked = with_halo_chunks(
@@ -266,7 +236,9 @@ def halo_mp_discord(
             out = out.astype({"discord_idx": np.int64, "nn_idx": np.int64})
         return out
 
-    return _sweep_chunks(chunked, kernel, halo_mp_schema).select(
+    return sweep_key_runs(
+        chunked, "chunk", ["rn"], each_run(kernel, "chunk"), halo_mp_schema
+    ).select(
         F.col("user_id").alias("section"),
         "discord_idx",
         "nn_idx",

@@ -36,7 +36,9 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         cpus_s = os.environ.get("SPARK_GRAFT_CPUS", "")
-        shuffle_partitions = int(cpus_s) if cpus_s.isdigit() else 32
+        shuffle_partitions = (
+            int(cpus_s) if cpus_s.isdigit() else len(os.sched_getaffinity(0))
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)

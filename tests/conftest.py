@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -24,6 +25,42 @@ def spark():
         },
     )
     yield s
+
+
+@contextlib.contextmanager
+def session_conf(spark, conf: dict):
+    """Set session confs for the block, then restore the previous values."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# indirect parametrisation of ``arrow_batch``: the session's Arrow batch
+# size, and one small enough that groups straddle batches
+ARROW_BATCHES = [
+    pytest.param(None, id="session_batch"),
+    pytest.param(7, id="batch7"),
+]
+
+
+@pytest.fixture
+def arrow_batch(spark, request):
+    """Runs the test with ``maxRecordsPerBatch`` = ``request.param``
+    (None keeps the session's value)."""
+    rows = request.param
+    conf = {} if rows is None else {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": rows
+    }
+    with session_conf(spark, conf):
+        yield rows
 
 
 def edges_df(spark, pairs, src_type="long"):

@@ -18,6 +18,8 @@ from rad_ecg_spark.operators.halo import (
 )
 from rad_ecg_spark.operators.matrixprofile import mp_discord_kernel
 
+from .conftest import ARROW_BATCHES
+
 
 def _series(spark, n, n_parts=8):
     """Deterministic pseudo-random event series (one global series)."""
@@ -52,7 +54,8 @@ class TestGlobalRowNumber:
 
 
 class TestHaloRollingMedian:
-    def test_matches_global_window(self, spark):
+    @pytest.mark.parametrize("arrow_batch", ARROW_BATCHES, indirect=True)
+    def test_matches_global_window(self, spark, arrow_batch):
         """Chunked+halo result == the single global window (computed via
         a one-partition Spark window — fine at test scale only)."""
         ev = _series(spark, 3000)
@@ -107,7 +110,8 @@ class TestHaloMatrixProfile:
                 )
         return out
 
-    def test_sections_match_direct_kernel(self, spark):
+    @pytest.mark.parametrize("arrow_batch", ARROW_BATCHES, indirect=True)
+    def test_sections_match_direct_kernel(self, spark, arrow_batch):
         n = 20_000
         ev = _series(spark, n)
         got = {

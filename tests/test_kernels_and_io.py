@@ -9,9 +9,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import ARROW_BATCHES
+
 
 class TestEpisodesUDTF:
-    def test_known_episode_structure(self, spark):
+    @pytest.mark.parametrize("arrow_batch", ARROW_BATCHES, indirect=True)
+    def test_known_episode_structure(self, spark, arrow_batch):
         import datetime as dt
 
         from rad_ecg_spark.operators.episodes import detect_episodes
@@ -26,6 +29,11 @@ class TestEpisodesUDTF:
             (4, m(3), 1, "c", 400.0, ""),
             # user 2: never above threshold -> zero episodes
             (5, m(0), 2, "c", 10.0, ""),
+        ] + [
+            # user 1's quiet lead-in: at batch7 the user, and its first
+            # episode, straddle two Arrow batches
+            (100 + k, m(k - 6), 1, "c", 100.0, "")
+            for k in range(6)
         ]
         ev = spark.createDataFrame(
             rows,

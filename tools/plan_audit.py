@@ -71,6 +71,24 @@ AUDITS: dict[str, dict] = {
         "max_exchanges": 1,  # ONE shuffle to co-locate groups
         "forbid": ["CartesianProduct", "SortMergeJoin"],
     },
+    # the other key-run sweep callers (operators/sweep.py): one shuffle
+    # by key; the halo rn range exchange sits behind a checkpoint
+    "matrix_profile_discord": {
+        "max_exchanges": 1,
+        "forbid": ["CartesianProduct", "SortMergeJoin"],
+    },
+    "fluss_regime": {
+        "max_exchanges": 1,
+        "forbid": ["CartesianProduct", "SortMergeJoin"],
+    },
+    "halo_rolling_median": {
+        "max_exchanges": 1,
+        "forbid": ["CartesianProduct", "SortMergeJoin"],
+    },
+    "halo_mp_discord": {
+        "max_exchanges": 1,
+        "forbid": ["CartesianProduct", "SortMergeJoin"],
+    },
     "dist_shift": {
         "max_read_cols": {"events": 2},
         "forbid": ["CartesianProduct"],
